@@ -32,7 +32,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 # --------------------------------------------------------------------------
@@ -293,17 +292,32 @@ class EmbeddingStore:
         """Collect ``(id, vec)`` frames into dense matrices (S7 checkpoint
         load path). Embedding tables are model parameters — orders of
         magnitude smaller than data — so a driver collect + broadcast is
-        the correct distribution strategy."""
+        the correct distribution strategy.  A checkpoint whose ids are
+        not exactly 0..N-1 once each raises instead of loading."""
 
-        def to_mat(df: DataFrame) -> np.ndarray:
+        def to_mat(df: DataFrame, what: str) -> np.ndarray:
             rows = df.select("id", "vec").collect()
-            n = max(r["id"] for r in rows) + 1
-            mat = np.zeros((n, len(rows[0]["vec"])), dtype=np.float32)
-            for r in rows:
-                mat[r["id"]] = r["vec"]
+            if not rows:
+                raise ValueError(f"EmbeddingStore checkpoint: {what} table is empty")
+            ids = np.array([r["id"] for r in rows], dtype=np.int64)
+            uniq, counts = np.unique(ids, return_counts=True)
+            if (counts > 1).any():
+                raise ValueError(
+                    f"EmbeddingStore checkpoint: {what} table has duplicate "
+                    f"ids {uniq[counts > 1][:5].tolist()}"
+                )
+            missing = np.setdiff1d(np.arange(uniq.max() + 1), uniq)
+            if uniq.min() < 0 or len(missing):
+                raise ValueError(
+                    f"EmbeddingStore checkpoint: {what} ids must be dense "
+                    f"0..N-1; missing {missing[:5].tolist()}, "
+                    f"negative {uniq[uniq < 0][:5].tolist()}"
+                )
+            mat = np.zeros((len(rows), len(rows[0]["vec"])), dtype=np.float32)
+            mat[ids] = [r["vec"] for r in rows]
             return mat
 
-        return cls(to_mat(ent_df), to_mat(rel_df))
+        return cls(to_mat(ent_df, "entity"), to_mat(rel_df, "relation"))
 
     def to_dataframes(self, spark: SparkSession) -> tuple[DataFrame, DataFrame]:
         ent = spark.createDataFrame(
@@ -313,43 +327,6 @@ class EmbeddingStore:
             [(i, v.tolist()) for i, v in enumerate(self.rel)], schema="id LONG, vec ARRAY<FLOAT>"
         )
         return ent, rel
-
-    def ent_quantized(self) -> tuple[np.ndarray, np.ndarray]:
-        """Per-row symmetric int8 quantization of the entity matrix
-        (the same scheme as ops/similarity.quantize_embeddings):
-        returns (qmat int8 [N, d], scales float32 [N]) with
-        qmat[i] = round(ent[i] / scales[i]), scales = max|ent[i]|/127.
-        4x smaller than float32 — the broadcast-ceiling knob for the
-        quantized scoring paths (score_all_tails(quantized=True)).
-        Cached after the first call."""
-        if getattr(self, "_quant_cache", None) is None:
-            amax = np.abs(self.ent).max(axis=1)
-            scales = (amax / 127.0).astype(np.float32)
-            safe = np.where(scales == 0, 1.0, scales).astype(np.float32)
-            q = np.round(self.ent / safe[:, None]).astype(np.int8)
-            object.__setattr__(self, "_quant_cache", (q, scales))
-        return self._quant_cache
-
-
-# Per-worker dequantization cache: a quantized broadcast is shipped and
-# stored int8 (the 4x win is transfer + block-manager residency), but
-# the GEMM kernels need float32 — dequantize ONCE per worker per
-# broadcast and reuse across tasks.  Keyed by the int8 array's identity
-# (the broadcast value object is stable within a worker); holding the
-# key object in the value pins its id.  Bounded to the last few
-# broadcasts so a long-lived worker never accumulates stale matrices.
-_DEQ_CACHE: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-
-def _dequantize_cached(q: np.ndarray, scales: np.ndarray) -> np.ndarray:
-    hit = _DEQ_CACHE.get(id(q))
-    if hit is not None and hit[0] is q:
-        return hit[1]
-    mat = (q.astype(np.float32) * scales[:, None]).astype(np.float32)
-    if len(_DEQ_CACHE) >= 4:
-        _DEQ_CACHE.pop(next(iter(_DEQ_CACHE)))
-    _DEQ_CACHE[id(q)] = (q, mat)
-    return mat
 
 
 # --------------------------------------------------------------------------
@@ -395,130 +372,74 @@ def score_triples(
     return df.mapInPandas(score_batches, schema=out_schema)
 
 
-def score_all_tails(
-    df: DataFrame,
+# Scores one kernel step may hold: the all-entity block is scored in row
+# chunks of MAX_FLUX // N source rows (at least one), mirroring the
+# reference's adaptive chunking (complex.py:18, 59-96).
+MAX_FLUX = 100_000
+
+
+def _all_entity_scores(
+    pdf: pd.DataFrame,
     model: KGEModel,
-    store: EmbeddingStore,
-    h_col: str = "h",
-    r_col: str = "r",
-    acc_col: str | None = None,
-    neg_col: str | None = None,
-    max_flux: int = 100_000,
-    keep_cols: tuple[str, ...] = (),
-    quantized: bool = False,
-) -> DataFrame:
-    """J2: theta-join of each (h, r) row against ALL entities, realized as
-    a broadcast mat-mul inside the kernel (never a crossJoin of rows —
-    SURVEY §4.2).  Emits the [rows × N] score block as (t, score) rows;
-    callers aggregate (max/sum/top-k) immediately after.
-
-    ``acc_col`` carries an accumulated source score that is ADDED to the
-    edge score (log-space product combine, cqd.py:319-320).  ``max_flux``
-    bounds scores-in-flight per kernel step, mirroring the reference's
-    adaptive chunking (complex.py:18, 59-96).  ``keep_cols`` are long
-    passthrough columns replicated onto each output row (e.g. query_id
-    for batched evaluation).
-
-    ``quantized=True`` ships the entity matrix as per-row symmetric
-    int8 + scales (EmbeddingStore.ent_quantized) — a 4x smaller
-    broadcast (transfer + block-manager residency; the ~25 GB
-    whole-matrix ceiling carries 4x the entities).  Workers dequantize
-    ONCE per broadcast (cached) back to float32 for the GEMM, so
-    compute is unchanged; scores differ from the exact path by the
-    quantization error only (component error <= scale/2 = max|x|/254
-    — rank-stability pinned by tests)."""
-    spark = df.sparkSession
-    if quantized:
-        b_ent = spark.sparkContext.broadcast(store.ent_quantized())
-    else:
-        b_ent = spark.sparkContext.broadcast(store.ent)
-    b_rel = spark.sparkContext.broadcast(store.rel)
-
-    def expand(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ent, rel = b_ent.value, b_rel.value
-        if quantized:
-            ent = _dequantize_cached(*ent)
-        n = ent.shape[0]
-        rows_per = max(1, max_flux // max(n, 1))
-        for pdf in it:
-            for lo in range(0, len(pdf), rows_per):
-                part = pdf.iloc[lo : lo + rows_per]
-                h = ent[part[h_col].to_numpy()]
-                r = rel[part[r_col].to_numpy()]
-                s = model.score_all(h, r, ent).astype(np.float64)  # [b, N]
-                if neg_col is not None:
-                    neg = part[neg_col].to_numpy().astype(bool)
-                    s = np.where(neg[:, None], -s, s)
-                if acc_col is not None:
-                    s = s + part[acc_col].to_numpy()[:, None]
-                b = s.shape[0]
-                out = {
-                    "t": np.tile(np.arange(n, dtype=np.int64), b),
-                    "score": s.reshape(-1),
-                }
-                for kc in keep_cols:
-                    out[kc] = np.repeat(part[kc].to_numpy(), n)
-                yield pd.DataFrame(out)
-
-    schema = "t long, score double" + "".join(f", {c} long" for c in keep_cols)
-    return df.mapInPandas(expand, schema=schema)
+    ent: np.ndarray,
+    rel: np.ndarray,
+    combine: bool,
+) -> Iterator[tuple[pd.DataFrame, np.ndarray]]:
+    """J2 kernel loop shared by every all-entity operator: yields
+    ``(chunk, scores)`` with ``scores[i, t]`` the score of
+    ``(chunk.h[i], chunk.r[i], t)`` for every entity t, as float64.
+    ``combine`` flips the sign where ``chunk.neg`` (J4 fuzzy negation,
+    abstract_kge.py:160-163), then adds ``chunk.acc``, the source
+    score (log-space product combine, cqd.py:319-320)."""
+    rows_per = max(1, MAX_FLUX // max(ent.shape[0], 1))
+    for lo in range(0, len(pdf), rows_per):
+        chunk = pdf.iloc[lo : lo + rows_per]
+        h = ent[chunk["h"].to_numpy()]
+        r = rel[chunk["r"].to_numpy()]
+        s = model.score_all(h, r, ent).astype(np.float64)  # [b, N]
+        if combine:
+            neg = chunk["neg"].to_numpy().astype(bool)
+            s = np.where(neg[:, None], -s, s) + chunk["acc"].to_numpy()[:, None]
+        yield chunk, s
 
 
 def score_all_tails_grouped_max(
     df: DataFrame,
     model: KGEModel,
     store: EmbeddingStore,
-    h_col: str = "h",
-    r_col: str = "r",
-    acc_col: str | None = None,
-    neg_col: str | None = None,
-    max_flux: int = 100_000,
-    group_cols: tuple[str, ...] = ("query_id",),
-    quantized: bool = False,
+    group_cols: tuple[str, ...],
 ) -> DataFrame:
-    """J2 + A1 fused: like :func:`score_all_tails`, but the per-group max
-    over the batch's source rows is taken INSIDE the kernel, so the
-    kernel emits N rows per (partition, group) instead of N rows per
-    source row — a beam_size× reduction in Arrow transfer and shuffle
-    input for the CQD expansion (round-1 judge note on the dense block).
+    """J2 + A1 fused: each ``(h, r)`` row of ``df`` is scored against ALL
+    entities as a broadcast mat-mul inside the kernel (never a
+    crossJoin of rows — SURVEY §4.2), and the max over the batch's
+    source rows per group is taken in the kernel too, so it emits N
+    rows per (partition, group) instead of N rows per source row.
 
-    Output is a PARTIAL aggregate: the same group can appear once per
-    partition, so callers must still merge with
-    ``groupBy(*group_cols, "t").max("score")`` — that groupBy now
-    shuffles N rows per group instead of beam×N.
+    ``df`` carries long ``h``, ``r`` and ``group_cols``, boolean
+    ``neg`` (flips the edge score's sign) and double ``acc`` (the
+    accumulated source score, added to it).
 
-    ``quantized=True``: int8 + scales entity broadcast (4x smaller),
-    dequantized once per worker — see score_all_tails.
+    Output ``(t, score, *group_cols)`` is a PARTIAL aggregate: the same
+    group can appear once per partition, so callers must still merge
+    with ``groupBy(*group_cols, "t").max("score")``.
     """
-    spark = df.sparkSession
-    if quantized:
-        b_ent = spark.sparkContext.broadcast(store.ent_quantized())
-    else:
-        b_ent = spark.sparkContext.broadcast(store.ent)
-    b_rel = spark.sparkContext.broadcast(store.rel)
     gcols = list(group_cols)
+    missing = {"h", "r", "neg", "acc", *gcols} - set(df.columns)
+    if missing:
+        raise ValueError(f"score_all_tails_grouped_max: missing columns {sorted(missing)}")
+    spark = df.sparkSession
+    b_ent = spark.sparkContext.broadcast(store.ent)
+    b_rel = spark.sparkContext.broadcast(store.rel)
 
     def expand(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ent, rel = b_ent.value, b_rel.value
-        if quantized:
-            ent = _dequantize_cached(*ent)
         n = ent.shape[0]
-        rows_per = max(1, max_flux // max(n, 1))
         for pdf in it:
             for gvals, part in pdf.groupby(gcols, sort=False):
                 if not isinstance(gvals, tuple):
                     gvals = (gvals,)
                 best: np.ndarray | None = None
-                for lo in range(0, len(part), rows_per):
-                    chunk = part.iloc[lo : lo + rows_per]
-                    h = ent[chunk[h_col].to_numpy()]
-                    r = rel[chunk[r_col].to_numpy()]
-                    s = model.score_all(h, r, ent).astype(np.float64)  # [b, N]
-                    if neg_col is not None:
-                        neg = chunk[neg_col].to_numpy().astype(bool)
-                        s = np.where(neg[:, None], -s, s)
-                    if acc_col is not None:
-                        s = s + chunk[acc_col].to_numpy()[:, None]
+                for _, s in _all_entity_scores(part, model, ent, rel, True):
                     m = s.max(axis=0)
                     best = m if best is None else np.maximum(best, m)
                 out = {"t": np.arange(n, dtype=np.int64), "score": best}
@@ -530,170 +451,15 @@ def score_all_tails_grouped_max(
     return df.mapInPandas(expand, schema=schema)
 
 
-def score_all_tails_sharded(
-    df: DataFrame,
-    model: KGEModel,
-    store: EmbeddingStore,
-    ent_df: DataFrame | None = None,
-    n_shards: int = 4,
-    h_col: str = "h",
-    r_col: str = "r",
-    acc_col: str | None = None,
-    neg_col: str | None = None,
-    max_flux: int = 100_000,
-    group_cols: tuple[str, ...] = ("query_id",),
-    eager_shards: bool = True,
-    overlap: int = 2,
-    quantized: bool = False,
-) -> DataFrame:
-    """Entity-axis sharded J2+A1: the answer when the entity matrix
-    exceeds the whole-matrix broadcast ceiling (SCALE.md: ~25 GB at
-    100M x 64 float32).
-
-    - head vectors arrive as a joined column from the (id, vec) entity
-      table (``ent_df``; at scale this MUST be the S7 checkpoint table
-      — the ``None`` default materializes the matrix on the driver and
-      exists for tests only).  Rows whose h id is missing from
-      ``ent_df`` raise in the kernel rather than silently dropping.
-    - the relation matrix (model-count sized) broadcasts whole;
-    - each of ``n_shards`` kernels broadcasts only its [N/n_shards, d]
-      slice and scores candidates against it, emitting per-group
-      partial maxes for its tail-id range.
-
-    ``eager_shards=True`` (the scale mode) runs the shards as eager
-    jobs: the candidate frame is snapshotted once (localCheckpoint —
-    also making a nondeterministic upstream safe to fan out), each
-    shard's partials are materialized, and its broadcast is destroyed
-    as soon as its job completes — so at most ``overlap`` slices are
-    resident per executor at a time.  ``overlap`` (round-6 ask #3)
-    runs that many shard jobs CONCURRENTLY from driver threads (the
-    standard Spark multi-job trick): strictly serial shards leave the
-    cluster idle during each job's tail (stragglers, broadcast
-    teardown), while full overlap re-creates the accumulate-all-slices
-    memory profile eager mode exists to avoid — ``overlap`` is the
-    explicit residency/throughput knob (peak slice memory ~= overlap x
-    slice bytes).  Measured (SCALE.md): overlap=4 recovered 22% of the
-    serial wall in the local rehearsal, while overlap=2 was within
-    noise of serial THERE (single-box shuffles hide most of the idle
-    tail the overlap exists to fill); 2 stays the default for bounded
-    residency — raise it when slices are small relative to executor
-    memory.  With ``eager_shards=False`` the
-    shards stay lazy in one union/one job, which bounds per-TASK
-    working memory but lets every shard's broadcast accumulate on each
-    executor — fine below the ceiling, not above it.
-
-    Same partial-aggregate contract as score_all_tails_grouped_max:
-    merge with ``groupBy(*group_cols, "t").max("score")``.
-
-    ``quantized=True``: each shard broadcasts its int8 slice + scales
-    (4x smaller transfer AND 4x smaller overlap-bounded residency),
-    dequantized once per worker — see score_all_tails.  Head vectors
-    still come from ``ent_df`` at full float precision (only the tail
-    matrix rides the quantized broadcast), so scores differ from the
-    whole-matrix quantized path within the head reconstruction bound.
-    """
-    spark = df.sparkSession
-    if ent_df is None:
-        ent_df, _ = store.to_dataframes(spark)
-    b_rel = spark.sparkContext.broadcast(store.rel)
-    gcols = list(group_cols)
-    withv = df.join(
-        ent_df.select(F.col("id").alias(h_col), F.col("vec").alias("__hvec")),
-        h_col,
-        "left",
-    )
-    if eager_shards:
-        withv = withv.localCheckpoint(eager=True)
-
-    n = store.ent.shape[0]
-    step = max(1, (n + n_shards - 1) // n_shards)
-    schema = "t long, score double" + "".join(f", {c} long" for c in gcols)
-
-    def run_shard(lo: int) -> DataFrame:
-        hi = min(lo + step, n)
-        if quantized:
-            # each shard ships its int8 slice + scales: the per-slice
-            # residency (overlap x slice bytes) shrinks 4x too
-            qm, sc = store.ent_quantized()
-            b_shard = spark.sparkContext.broadcast((qm[lo:hi], sc[lo:hi]))
-        else:
-            b_shard = spark.sparkContext.broadcast(store.ent[lo:hi])
-
-        def expand(
-            it: Iterator[pd.DataFrame], lo: int = lo, b_shard=b_shard
-        ) -> Iterator[pd.DataFrame]:
-            rel = b_rel.value
-            shard = b_shard.value
-            if quantized:
-                shard = _dequantize_cached(*shard)
-            sn = shard.shape[0]
-            rows_per = max(1, max_flux // max(sn, 1))
-            for pdf in it:
-                if pdf["__hvec"].isna().any():
-                    missing = pdf.loc[pdf["__hvec"].isna(), h_col].unique()
-                    raise ValueError(
-                        f"candidate h ids missing from ent_df: {missing[:5]}"
-                    )
-                for gvals, part in pdf.groupby(gcols, sort=False):
-                    if not isinstance(gvals, tuple):
-                        gvals = (gvals,)
-                    best: np.ndarray | None = None
-                    for plo in range(0, len(part), rows_per):
-                        chunk = part.iloc[plo : plo + rows_per]
-                        h = np.stack(chunk["__hvec"].to_numpy()).astype(np.float32)
-                        r = rel[chunk[r_col].to_numpy()]
-                        s = model.score_all(h, r, shard).astype(np.float64)
-                        if neg_col is not None:
-                            neg = chunk[neg_col].to_numpy().astype(bool)
-                            s = np.where(neg[:, None], -s, s)
-                        if acc_col is not None:
-                            s = s + chunk[acc_col].to_numpy()[:, None]
-                        m = s.max(axis=0)
-                        best = m if best is None else np.maximum(best, m)
-                    out = {
-                        "t": np.arange(lo, lo + sn, dtype=np.int64),
-                        "score": best,
-                    }
-                    for c, v in zip(gcols, gvals):
-                        out[c] = np.full(sn, v, dtype=np.int64)
-                    yield pd.DataFrame(out)
-
-        partial = withv.mapInPandas(expand, schema=schema)
-        if eager_shards:
-            # materialize this shard's partials, then drop its slice
-            # from the executors as soon as its job finishes
-            partial = partial.localCheckpoint(eager=True)
-            b_shard.unpersist(blocking=False)
-        return partial
-
-    offsets = list(range(0, n, step))
-    if eager_shards and overlap > 1 and len(offsets) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        # concurrent Spark jobs from driver threads; map() preserves
-        # shard order so the output frame is deterministic
-        with ThreadPoolExecutor(max_workers=int(overlap)) as ex:
-            frames = list(ex.map(run_shard, offsets))
-    else:
-        frames = [run_shard(lo) for lo in offsets]
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return out
-
-
 def rank_of_tails(
     df: DataFrame,
     model: KGEModel,
     store: EmbeddingStore,
-    h_col: str = "h",
-    r_col: str = "r",
-    t_col: str = "t",
 ) -> DataFrame:
-    """E9/R10 building block: for each (h, r, t) row, the rank of t among
-    all entities by score (0 = best), computed inside the kernel as a
-    count-of-better — O(N) per row, no argsort-of-argsort, no N-row
-    explosion (SURVEY §7 'hard parts')."""
+    """E9/R10 building block: for each ``(h, r, t)`` row, the rank of t
+    among all entities by score (0 = best), computed inside the kernel
+    as a count-of-better — O(N) per row, no argsort-of-argsort, no
+    N-row explosion (SURVEY §7 'hard parts')."""
     spark = df.sparkSession
     b_ent = spark.sparkContext.broadcast(store.ent)
     b_rel = spark.sparkContext.broadcast(store.rel)
@@ -706,13 +472,12 @@ def rank_of_tails(
     def ranker(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ent, rel = b_ent.value, b_rel.value
         for pdf in it:
-            h = ent[pdf[h_col].to_numpy()]
-            r = rel[pdf[r_col].to_numpy()]
-            scores = model.score_all(h, r, ent)  # [b, N]
-            own = scores[np.arange(len(pdf)), pdf[t_col].to_numpy()]
-            rank = np.sum(scores > own[:, None], axis=1)
+            ranks = [np.zeros(0, dtype=np.int64)]
+            for chunk, s in _all_entity_scores(pdf, model, ent, rel, False):
+                own = s[np.arange(len(chunk)), chunk["t"].to_numpy()]
+                ranks.append(np.sum(s > own[:, None], axis=1).astype(np.int64))
             pdf = pdf.copy()
-            pdf["rank"] = rank.astype(np.int64)
+            pdf["rank"] = np.concatenate(ranks)
             yield pdf
 
     return df.mapInPandas(ranker, schema=out_schema)

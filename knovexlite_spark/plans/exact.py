@@ -21,6 +21,8 @@ broadcast joins at runtime.  Nothing here collects to the driver.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -82,18 +84,24 @@ def _order_positive(clause: ConjunctiveClause) -> list[Atomic]:
 
 
 def compile_clause(
-    triples: DataFrame, clause: ConjunctiveClause, bindings: dict[str, int]
+    clause: ConjunctiveClause, frame: Callable[[Atomic], DataFrame]
 ) -> DataFrame:
-    """One conjunctive clause -> DataFrame of all variable bindings."""
+    """One conjunctive clause -> DataFrame of all variable bindings, for
+    both the single and the batched evaluator: ``frame(atom)`` builds
+    one atom's variable columns (:func:`atom_frame` or
+    :func:`_batched_atom_frame`).  Positive atoms join in
+    :func:`_order_positive` order on their shared columns (a cross join
+    when there are none); each negated atom is then a ``left_anti`` join
+    on its own columns, which the positive atoms must all bind."""
     ordered = _order_positive(clause)
-    acc = atom_frame(triples, ordered[0], bindings)
+    acc = frame(ordered[0])
     for atom in ordered[1:]:
-        right = atom_frame(triples, atom, bindings)
+        right = frame(atom)
         shared = sorted(set(acc.columns) & set(right.columns))
         acc = acc.join(right, on=shared) if shared else acc.crossJoin(right)
 
     for atom in clause.negative:
-        neg = atom_frame(triples, atom, bindings)
+        neg = frame(atom)
         neg_vars = set(neg.columns)
         unbound = neg_vars - set(acc.columns)
         if unbound:
@@ -185,22 +193,8 @@ def answer_counts_batched(
             f"answer_counts_batched: instances {[r['query_id'] for r in bad_rows]} "
             f"are missing bindings for some of the clause symbols {required}"
         )
-    ordered = _order_positive(clause)
-    acc = _batched_atom_frame(triples, inst, ordered[0])
-    for atom in ordered[1:]:
-        right = _batched_atom_frame(triples, inst, atom)
-        shared = sorted(set(acc.columns) & set(right.columns))
-        acc = acc.join(right, on=shared)
-    for atom in clause.negative:
-        neg = _batched_atom_frame(triples, inst, atom)
-        neg_vars = set(neg.columns)
-        unbound = neg_vars - set(acc.columns)
-        if unbound:
-            raise ValueError(
-                f"unsafe negation: {atom.lstr()} binds {sorted(unbound)} "
-                "not bound by any positive atom"
-            )
-        acc = acc.join(neg, on=sorted(neg_vars), how="left_anti")
+    # every batched atom frame carries query_id, so no join is a cross join
+    acc = compile_clause(clause, lambda atom: _batched_atom_frame(triples, inst, atom))
     if free_var not in acc.columns:
         raise ValueError(f"free variable {free_var!r} not bound in {lstr!r}")
     return acc.groupBy("query_id", F.col(free_var).alias("t")).agg(
@@ -226,7 +220,7 @@ def answer_exact(
     clauses = dnf_conjuncts(formula)
     parts = []
     for clause in clauses:
-        df = compile_clause(triples, clause, bindings)
+        df = compile_clause(clause, lambda atom: atom_frame(triples, atom, bindings))
         if free_var not in df.columns:
             raise ValueError(f"free variable {free_var!r} not in clause {clause}")
         parts.append(df.select(free_var))

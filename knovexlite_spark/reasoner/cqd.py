@@ -42,7 +42,6 @@ from pyspark.sql import functions as F
 from knovexlite_spark.functions.kge import (
     EmbeddingStore,
     KGEModel,
-    score_all_tails,  # noqa: F401 - public re-export; unfused variant
     score_all_tails_grouped_max,
 )
 from knovexlite_spark.language.ast import ConjunctiveClause
@@ -183,8 +182,6 @@ class CQDBeam:
                 all_src,
                 self.model,
                 self.store,
-                acc_col="acc",
-                neg_col="neg",
                 group_cols=("query_id", "edge_id"),
             )
             # ONE exchange per level: hash-partition the partials by

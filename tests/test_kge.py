@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from knovexlite_spark.functions import kge
 from knovexlite_spark.functions.kge import (
     ComplEx,
     DistMult,
@@ -14,12 +15,47 @@ from knovexlite_spark.functions.kge import (
     TransE,
     inverse_relation_ids,
     rank_of_tails,
-    score_all_tails,
+    score_all_tails_grouped_max,
     score_triples,
 )
 from knovexlite_spark.functions.tnorm import TNorm
 
 RNG = np.random.default_rng(7)
+KERNEL_SCHEMA = "query_id long, h long, r long, neg boolean, acc double"
+
+
+def grouped_max_reference(model, store, rows):
+    """NumPy form of score_all_tails_grouped_max merged across
+    partitions: per query_id, the max over its (h, r, neg, acc) rows of
+    +-score_all + acc.  Returns {(query_id, t): score}."""
+    best: dict[int, np.ndarray] = {}
+    for q, h, r, neg, acc in rows:
+        s = model.score_all(store.ent[[h]], store.rel[[r]], store.ent)[0]
+        s = (-s if neg else s).astype(np.float64) + acc
+        best[q] = s if q not in best else np.maximum(best[q], s)
+    return {(q, t): float(v) for q, s in best.items() for t, v in enumerate(s)}
+
+
+def merged_grouped_max(df, model, store):
+    out = (
+        score_all_tails_grouped_max(df, model, store, group_cols=("query_id",))
+        .groupBy("query_id", "t").agg(F.max("score").alias("score"))
+        .toPandas()
+    )
+    return {(int(q), int(t)): v for q, t, v in zip(out["query_id"], out["t"], out["score"])}
+
+
+def assert_scores_match(got, want, atol=1e-9):
+    assert got.keys() == want.keys()
+    keys = sorted(want)
+    np.testing.assert_allclose(
+        [got[k] for k in keys], [want[k] for k in keys], rtol=0, atol=atol
+    )
+
+
+def rank_reference(model, store, h, r, t):
+    scores = model.score_all(store.ent[[h]], store.rel[[r]], store.ent)[0]
+    return int(np.sum(scores > scores[t]))
 
 
 def test_transe_kernel():
@@ -127,14 +163,14 @@ def test_spark_score_triples_matches_numpy(spark):
 def test_spark_score_all_tails_negation(spark):
     store = EmbeddingStore.xavier(num_entities=10, num_relations=4, ent_dim=6, seed=2)
     model = DistMult()
-    df = spark.createDataFrame(
-        [(3, 1, True, 0.5)], schema="h long, r long, neg boolean, acc double"
+    rows = [(0, 3, 1, True, 0.5)]
+    got = merged_grouped_max(spark.createDataFrame(rows, KERNEL_SCHEMA), model, store)
+    assert len(got) == 10
+    assert_scores_match(got, grouped_max_reference(model, store, rows))
+    # the reference itself: the sign flips before acc is added
+    assert np.isclose(
+        got[(0, 4)], -model.score(store.ent[3], store.rel[1], store.ent[4]) + 0.5, atol=1e-6
     )
-    out = {r["t"]: r["score"] for r in score_all_tails(df, model, store, neg_col="neg", acc_col="acc").collect()}
-    assert len(out) == 10
-    for t in range(10):
-        want = -model.score(store.ent[3], store.rel[1], store.ent[t]) + 0.5
-        assert np.isclose(out[t], want, atol=1e-4)
 
 
 def test_spark_rank_of_tails(spark):
@@ -142,9 +178,9 @@ def test_spark_rank_of_tails(spark):
     model = DistMult()
     df = spark.createDataFrame([(0, 1, 5), (2, 0, 7)], schema="h long, r long, t long")
     got = {(r["h"], r["r"], r["t"]): r["rank"] for r in rank_of_tails(df, model, store).collect()}
+    assert len(got) == 2
     for (h, r, t), rank in got.items():
-        scores = model.score_all(store.ent[[h]], store.rel[[r]], store.ent)[0]
-        assert rank == int(np.sum(scores > scores[t]))
+        assert rank == rank_reference(model, store, h, r, t)
 
 
 def test_tnorm_grouped_product(spark):
@@ -203,176 +239,64 @@ def test_conve_spark_scoring(spark):
 
 
 def test_grouped_max_expansion_equals_unfused(spark):
-    """score_all_tails_grouped_max + merge == score_all_tails + groupBy
-    max (the J2+A1 fusion must be a pure plan optimization)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from knovexlite_spark.functions.kge import (
-        EmbeddingStore,
-        TransE,
-        score_all_tails,
-        score_all_tails_grouped_max,
-    )
-
+    """score_all_tails_grouped_max, merged across partitions, equals the
+    unfused NumPy block: score_all, sign flip, acc add, max per query."""
     store = EmbeddingStore.xavier(12, 4, ent_dim=6, seed=9)
-    rows = [(q, h, r, False, float(a)) for q, h, r, a in
-            [(0, 1, 0, 0.0), (0, 2, 1, -0.5), (0, 3, 0, 1.5),
-             (1, 4, 2, 0.0), (1, 5, 3, 2.0)]]
-    df = spark.createDataFrame(
-        rows, schema="query_id long, h long, r long, neg boolean, acc double"
-    ).repartition(3)
-    unfused = (
-        score_all_tails(df, TransE(), store, acc_col="acc", neg_col="neg",
-                        keep_cols=("query_id",))
-        .groupBy("query_id", "t").agg(F.max("score").alias("score"))
-    )
-    fused = (
-        score_all_tails_grouped_max(df, TransE(), store, acc_col="acc",
-                                    neg_col="neg", group_cols=("query_id",))
-        .groupBy("query_id", "t").agg(F.max("score").alias("score"))
-    )
-    a = {(r["query_id"], r["t"]): r["score"] for r in unfused.collect()}
-    b = {(r["query_id"], r["t"]): r["score"] for r in fused.collect()}
-    assert a.keys() == b.keys()
-    assert all(np.isclose(a[k], b[k], atol=1e-9) for k in a)
+    rows = [(0, 1, 0, False, 0.0), (0, 2, 1, True, -0.5), (0, 3, 0, False, 1.5),
+            (1, 4, 2, False, 0.0), (1, 5, 3, True, 2.0)]
+    df = spark.createDataFrame(rows, KERNEL_SCHEMA).repartition(3)
+    got = merged_grouped_max(df, TransE(), store)
+    assert_scores_match(got, grouped_max_reference(TransE(), store, rows))
 
 
-def test_sharded_expansion_equals_grouped_max(spark):
-    """Entity-axis sharding (no whole-matrix broadcast) must be a pure
-    distribution change: merged shard partials == the single-broadcast
-    grouped-max path, across uneven shard boundaries."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from knovexlite_spark.functions.kge import (
-        EmbeddingStore,
-        RotatE,
-        score_all_tails_grouped_max,
-        score_all_tails_sharded,
-    )
-
-    store = EmbeddingStore.xavier(13, 4, ent_dim=8, rel_dim=4, seed=21)
-    rows = [(0, 1, 0, False, 0.0), (0, 2, 1, True, -1.0),
-            (1, 3, 2, False, 0.5), (1, 4, 3, False, 0.0)]
-    df = spark.createDataFrame(
-        rows, schema="query_id long, h long, r long, neg boolean, acc double"
-    ).repartition(2)
-    base = (
-        score_all_tails_grouped_max(df, RotatE(), store, acc_col="acc",
-                                    neg_col="neg")
-        .groupBy("query_id", "t").agg(F.max("score").alias("score"))
-    )
-    a = {(r["query_id"], r["t"]): r["score"] for r in base.collect()}
-    # overlap sweep: serial, the default 2-way, and full fan-out must
-    # all be pure distribution changes (round-6 concurrent shard jobs)
-    for overlap in (1, 2, 4):
-        shard = (
-            score_all_tails_sharded(df, RotatE(), store, n_shards=3,
-                                    acc_col="acc", neg_col="neg",
-                                    overlap=overlap)
-            .groupBy("query_id", "t").agg(F.max("score").alias("score"))
-        )
-        b = {(r["query_id"], r["t"]): r["score"] for r in shard.collect()}
-        assert a.keys() == b.keys(), overlap
-        assert all(np.isclose(a[k], b[k], atol=1e-6) for k in a), overlap
+def test_grouped_max_requires_column_contract(spark):
+    df = spark.createDataFrame([(0, 1, 0)], "query_id long, h long, r long")
+    with pytest.raises(ValueError, match=r"missing columns \['acc', 'neg'\]"):
+        score_all_tails_grouped_max(df, TransE(), EmbeddingStore.xavier(4, 2, 4), ("query_id",))
 
 
-# --------------------------------------- quantized scoring (round 7)
+def test_all_entity_kernels_chunk_one_row_per_step(spark):
+    """Past MAX_FLUX // 2 entities each kernel step scores one source
+    row, so the chunk loop runs once per row: grouped max and rank must
+    still equal the NumPy block."""
+    n = kge.MAX_FLUX // 2 + 1
+    assert kge.MAX_FLUX // n == 1
+    store = EmbeddingStore.xavier(n, 3, ent_dim=4, seed=11)
+    model = DistMult()
+    rows = [(0, 7, 0, False, 0.0), (0, 42, 1, True, -0.25), (0, n - 1, 2, False, 0.5),
+            (1, 3, 2, False, 1.0), (1, 9, 0, True, 0.0)]
+    df = spark.createDataFrame(rows, KERNEL_SCHEMA).coalesce(1)
+    got = merged_grouped_max(df, model, store)
+    assert_scores_match(got, grouped_max_reference(model, store, rows))
+
+    triples = [(7, 0, 5), (42, 1, n - 1), (n - 1, 2, 0)]
+    ranked = rank_of_tails(
+        spark.createDataFrame(triples, "h long, r long, t long").coalesce(1), model, store
+    ).collect()
+    assert sorted((x["h"], x["r"], x["t"]) for x in ranked) == sorted(triples)
+    for x in ranked:
+        assert x["rank"] == rank_reference(model, store, x["h"], x["r"], x["t"])
 
 
-def test_score_all_tails_quantized_close_and_rank_stable(spark):
-    """quantized=True: scores within the int8 reconstruction bound of
-    the exact path, and the per-row argmax (the decision every
-    consumer aggregates toward) matches on a comfortable margin."""
-    import numpy as np
-
-    from knovexlite_spark.functions.kge import (
-        EmbeddingStore,
-        TransE,
-        score_all_tails,
-    )
-
-    store = EmbeddingStore.xavier(60, 4, 16, seed=3)
-    model = TransE()
-    df = spark.createDataFrame(
-        [(i % 60, i % 4, i) for i in range(20)], "h long, r long, query_id long"
-    )
-    exact = score_all_tails(
-        df, model, store, keep_cols=("query_id",)
-    ).toPandas()
-    quant = score_all_tails(
-        df, model, store, keep_cols=("query_id",), quantized=True
-    ).toPandas()
-    e = exact.sort_values(["query_id", "t"]).reset_index(drop=True)
-    q = quant.sort_values(["query_id", "t"]).reset_index(drop=True)
-    assert (e[["query_id", "t"]].values == q[["query_id", "t"]].values).all()
-    # TransE distance scores move by at most the L1 mass of the
-    # per-component error (<= d * max_scale/2, far below 1 here)
-    assert np.abs(e["score"].values - q["score"].values).max() < 0.5
-    # argmax per query matches between paths
-    am_e = e.loc[e.groupby("query_id")["score"].idxmax()]["t"].tolist()
-    am_q = q.loc[q.groupby("query_id")["score"].idxmax()]["t"].tolist()
-    agree = sum(a == b for a, b in zip(am_e, am_q))
-    assert agree >= len(am_e) - 1  # near-ties may flip at most one
+def test_store_dataframes_roundtrip(spark):
+    store = EmbeddingStore.xavier(5, 2, ent_dim=3, seed=4)
+    back = EmbeddingStore.from_dataframes(*store.to_dataframes(spark))
+    np.testing.assert_array_equal(back.ent, store.ent)
+    np.testing.assert_array_equal(back.rel, store.rel)
 
 
-def test_score_all_tails_sharded_quantized_matches_unsharded_quantized(spark):
-    """The sharded quantized path slices the SAME int8 matrix as the
-    whole-matrix quantized path, but its HEAD vectors stay float (they
-    come from ent_df, the scale contract) while the whole-matrix path
-    gathers dequantized heads — so scores agree within the head
-    reconstruction bound, not bit-exactly."""
-    from pyspark.sql import functions as F
-
-    from knovexlite_spark.functions.kge import (
-        EmbeddingStore,
-        TransE,
-        score_all_tails,
-        score_all_tails_sharded,
-    )
-
-    store = EmbeddingStore.xavier(40, 3, 8, seed=5)
-    model = TransE()
-    df = spark.createDataFrame(
-        [(i % 40, i % 3, i) for i in range(8)], "h long, r long, query_id long"
-    )
-    whole = (
-        score_all_tails(df, model, store, keep_cols=("query_id",), quantized=True)
-        .groupBy("query_id", "t")
-        .agg(F.max("score").alias("score"))
-        .toPandas()
-        .sort_values(["query_id", "t"])
-        .reset_index(drop=True)
-    )
-    sharded = (
-        score_all_tails_sharded(
-            df, model, store, n_shards=3, quantized=True, overlap=2
-        )
-        .groupBy("query_id", "t")
-        .agg(F.max("score").alias("score"))
-        .toPandas()
-        .sort_values(["query_id", "t"])
-        .reset_index(drop=True)
-    )
-    assert (whole[["query_id", "t"]].values == sharded[["query_id", "t"]].values).all()
-    import numpy as np
-
-    assert np.abs(whole["score"].values - sharded["score"].values).max() < 0.01
-
-
-def test_ent_quantized_shape_and_bound():
-    import numpy as np
-
-    from knovexlite_spark.functions.kge import EmbeddingStore
-
-    store = EmbeddingStore.xavier(30, 2, 12, seed=7)
-    q, s = store.ent_quantized()
-    assert q.dtype == np.int8 and s.dtype == np.float32
-    assert q.shape == store.ent.shape and s.shape == (30,)
-    deq = q.astype(np.float32) * s[:, None]
-    assert np.abs(deq - store.ent).max() <= (s.max() / 2) + 1e-7
-    # 4x memory: int8 matrix + one float scale per row
-    assert q.nbytes == store.ent.nbytes // 4
-    # cached: same object back
-    assert store.ent_quantized()[0] is q
+@pytest.mark.parametrize(
+    "ids, match",
+    [
+        ([0, 1, 3], r"entity ids must be dense 0..N-1; missing \[2\]"),
+        ([0, 1, 1, 2], r"entity table has duplicate ids \[1\]"),
+        ([], r"entity table is empty"),
+    ],
+    ids=["gap", "duplicate", "empty"],
+)
+def test_store_from_dataframes_rejects_bad_checkpoint(spark, ids, match):
+    schema = "id LONG, vec ARRAY<FLOAT>"
+    ent = spark.createDataFrame([(i, [float(i), 0.0]) for i in ids], schema)
+    rel = spark.createDataFrame([(0, [1.0, 1.0])], schema)
+    with pytest.raises(ValueError, match=match):
+        EmbeddingStore.from_dataframes(ent, rel)
